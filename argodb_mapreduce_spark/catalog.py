@@ -93,11 +93,12 @@ def parse_filter(filter_str: str) -> tuple[str, str]:
 #: stages every fixture in an explicit untimed pre-pass, so the timed
 #: query bodies can only ever *read* pre-staged inputs — the
 #: staging-vs-computation boundary is enforced by code, not by builder
-#: discipline. ``_FIXTURES_FRESH`` memoizes (src, marker) pairs already
-#: verified fresh in this process so the timed region normally performs
-#: zero staleness checks at all (not even a stat).
+#: discipline. ``_FIXTURES_FRESH`` memoizes the (src, marker, src mtime,
+#: marker mtime) tuples already verified fresh in this process: a repeat
+#: check costs two stats, and a source regenerated later in the same
+#: process has a new mtime, so it misses the memo and is stale again.
 _TIMED_REGION = False
-_FIXTURES_FRESH: set[tuple[str, str]] = set()
+_FIXTURES_FRESH: set[tuple[str, str, float, float]] = set()
 
 
 class FixtureBuildInTimedRegion(RuntimeError):
@@ -131,18 +132,19 @@ def fixture_stale(src: str, marker: str) -> bool:
     ``timed_region()`` that would mean staging work on the measurement
     clock, so it raises ``FixtureBuildInTimedRegion`` instead (r15
     structural boundary). Fresh results are memoized per (src, marker)
-    so repeat checks inside the timed region cost nothing."""
-    key = (src, marker)
-    if key in _FIXTURES_FRESH:
-        return False
+    AND both mtimes, so a regenerated source is never served from the
+    memo."""
     if not os.path.exists(marker):
         stale = True
     else:
+        key = (src, marker, os.path.getmtime(src), os.path.getmtime(marker))
+        if key in _FIXTURES_FRESH:
+            return False
         # <= not <: on coarse-mtime filesystems a source regenerated
         # within the same timestamp tick as the marker must still count
         # as newer. Rebuilds are idempotent and cheap at fixture scale,
         # so the rare false-stale is the safe direction.
-        stale = os.path.getmtime(marker) <= os.path.getmtime(src)
+        stale = key[3] <= key[2]
     if stale:
         if _TIMED_REGION:
             raise FixtureBuildInTimedRegion(

@@ -29,8 +29,9 @@ def get_spark(app_name: str = "argodb_mapreduce_spark", cpus: int | None = None)
         # the wrong altitude — it un-serializes CPU-expanding joins
         # (minhash verify 27 -> 17.8 s) but taxes byte-proportional
         # stages (similarity_cosine_topk 4.9 -> 6.2 s). The expansion
-        # pathology is fixed at the PLAN level in the one place it
-        # exists (dedup_minhash_verified's width-pinned verify join).
+        # pathology is NOT fixed at the plan level yet: this knob is the
+        # only lever until the verify stage is sized from its candidate
+        # count instead of its bytes.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),

@@ -13,9 +13,10 @@ reference InputFormat             Python DataSource here
 setInput(db, table) + txn begin   DataSource(options) — path + version
 getSplits: snapshot → rowsets →   DataSourceReader.partitions():
   file-aligned splits               manifest resolved at PLAN time →
-  (splitRowSetsToFiles :156-158)    one InputPartition per parquet file
+  (splitRowSetsToFiles :156-158)    one unit per parquet file, units
+                                    packed into whole-file bins
 createRecordReader/nextKeyValue   read(partition): pyarrow record
-  (row loop :121-169)               batches streamed per file
+  (row loop :121-169)               batches streamed file by file
 snapshot renew / RO locks         manifest pinned in the reader object
   (:257-279)                        — concurrent writes can't change a
                                     planned scan's file set
@@ -26,10 +27,14 @@ analogue of the reference's ``ReadMode.BatchMode``, :292), not Python
 tuples. Classes are defined inside a factory function so cloudpickle
 ships them BY VALUE — executors cannot import this repo.
 
-Scale: one partition per file gives the same parallelism contract as
-the reference's file-aligned splits; a 100 TB versioned table fans out
-to its file count, and Spark schedules partitions with the usual
-locality/packing. Source-level DATA SKIPPING is implemented through an
+Scale: splits stay file-aligned like the reference's — no file is ever
+cut, and each keeps its own deletion-vector positions and partition
+values — but small files share a task, packed the way Spark's own file
+sources pack them (``_pack``): max(ceil(bytes / maxPartitionBytes),
+min(files, defaultParallelism)) bins. Every Python read task costs a
+fixed ~0.3 s of worker CPU, so a small table runs as few tasks as there
+are cores, while a 100 TB versioned table still fans out by bytes.
+Source-level DATA SKIPPING is implemented through an
 immutable ``prune`` LOAD OPTION (JSON ``(col, op, literal)`` triples):
 ``partitions()`` drops every file whose manifest min/max provably
 excludes the predicates — the same channel the reference uses for its
@@ -58,10 +63,16 @@ from argodb_mapreduce_spark.registry import register
 FORMAT_NAME = "argodb_versioned"
 
 
-def make_versioned_datasource():
+def make_versioned_datasource(
+    max_partition_bytes: int = 128 << 20, parallelism: int = 1
+):
     """Build the DataSource class. Everything needed executor-side is
     defined in this closure (pickled by value) or imported from
-    packages the executors do have (pyspark, pyarrow, json, os)."""
+    packages the executors do have (pyspark, pyarrow, json, os).
+
+    ``max_partition_bytes`` and ``parallelism`` size the read splits
+    (:func:`_pack`); :func:`register_datasource` passes the session's
+    ``spark.sql.files.maxPartitionBytes`` and default parallelism."""
     import json as _json
     import os as _os
 
@@ -489,6 +500,65 @@ def make_versioned_datasource():
             # them as constant typed columns, the record-reader
             # partition-value append re-expressed.
             self.parts = parts
+
+    class FileBin(InputPartition):
+        """One read task: whole-file units (SegmentFilePartition /
+        CDFPartition), each keeping its own DV positions and partition
+        values — a file is never cut."""
+
+        def __init__(self, units):
+            self.units = tuple(units)
+
+    def _pack(units):
+        """Pack per-file units into whole-file bins the way Spark's own
+        file sources pack small files: max(ceil(total bytes /
+        max_partition_bytes), min(units, parallelism)) bins, capped at
+        the unit count, filled largest unit first onto the least-loaded
+        bin. Each Python read task costs a fixed ~0.3 s of worker CPU,
+        so a table of small files runs as few tasks as there are cores
+        while a large table still fans out by bytes. Units keep their
+        planned order inside a bin."""
+        import heapq
+        import math
+
+        if not units:
+            return []
+
+        def size(u):
+            try:
+                return _os.path.getsize(u.path)
+            except OSError:
+                return 0
+
+        sizes = [size(u) for u in units]
+        n = min(
+            len(units),
+            max(
+                math.ceil(sum(sizes) / max_partition_bytes),
+                min(len(units), parallelism),
+            ),
+        )
+        heap = [(0, b) for b in range(n)]
+        bins = [[] for _ in range(n)]
+        for i in sorted(range(len(units)), key=lambda i: -sizes[i]):
+            load, b = heapq.heappop(heap)
+            bins[b].append(i)
+            heapq.heappush(heap, (load + sizes[i], b))
+        return [FileBin(units[i] for i in sorted(b)) for b in bins]
+
+    def _one_schema(batches):
+        """One read task's batches under ONE Arrow schema — the first
+        batch's, every field nullable. Files packed into one task may
+        come from different writers that disagree on field nullability
+        (Spark's writer marks non-null columns), and the task's Arrow
+        stream refuses a batch whose schema differs from the first."""
+        import pyarrow as pa
+
+        schema = None
+        for b in batches:
+            if schema is None:
+                schema = pa.schema([f.with_nullable(True) for f in b.schema])
+            yield b if b.schema.equals(schema) else b.cast(schema)
 
     class CDFPartition(InputPartition):
         """One change-feed unit: an appended file (kind='insert'), the
@@ -1039,24 +1109,34 @@ def make_versioned_datasource():
             )
 
         def partitions(self):
-            # One partition per parquet file — the reference's
-            # file-aligned splits (splitRowSetsToFiles) — minus every
-            # file whose segment stats provably exclude the option
-            # predicates (plan-time data skipping INSIDE the source).
-            # Partitioned-segment files carry exact [v, v] stats for
-            # their partition columns, so equality/range predicates on
-            # them prune file-precisely (Hive partition pruning).
+            # One unit per parquet file — the reference's file-aligned
+            # splits (splitRowSetsToFiles) — minus every file whose
+            # segment stats provably exclude the option predicates
+            # (plan-time data skipping INSIDE the source), packed into
+            # whole-file bins (_pack). Partitioned-segment files carry
+            # exact [v, v] stats for their partition columns, so
+            # equality/range predicates on them prune file-precisely
+            # (Hive partition pruning).
             files = [
                 f
                 for f in self.files
                 if _stats_may_match(self.file_stats.get(f), self.prune)
             ]
-            return [
-                SegmentFilePartition(f, self.excluded.get(f, ()), self._split_parts(f))
-                for f in files
-            ]
+            return _pack(
+                [
+                    SegmentFilePartition(
+                        f, self.excluded.get(f, ()), self._split_parts(f)
+                    )
+                    for f in files
+                ]
+            )
 
         def read(self, partition):
+            return _one_schema(
+                b for unit in partition.units for b in self.read_file(unit)
+            )
+
+        def read_file(self, partition):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
@@ -2266,7 +2346,7 @@ def make_versioned_datasource():
         ``ignoreDeletes`` contract.
 
         Scale: partitions(start, end) lists only the DELTA segments'
-        files (one partition per file, the batch reader's split
+        files (whole files packed into bins, the batch reader's split
         contract), so a day's micro-batches each touch O(new data), and
         the offset log is O(versions)."""
 
@@ -2767,7 +2847,7 @@ def make_versioned_datasource():
                 prev = segs
                 prev_dv = entries[v].get("dv")
                 prev_entry = entries[v]
-            return parts
+            return _pack(parts)
 
         def _parts_of_file(self, entry, fp):
             """((col, raw, type), ...) for a DV-referenced file: resolve
@@ -2792,23 +2872,30 @@ def make_versioned_datasource():
             return ()
 
         def read(self, partition):
-            if not isinstance(partition, CDFPartition):
-                # Same Arrow-batch file reader as the batch path; the
-                # plan-order emit appends partition values for splits
-                # from partitioned segments (no-op for flat files
-                # already in plan order).
-                return VersionedReader(
-                    [], {}, self._prune, {},
-                    col_order=(
-                        self._base_cols
-                        if (self._base_cols or not self._mapping_active)
-                        else None
-                    ),
-                    col_types=self._base_types,
-                    renames=self._renames,
-                    encryption_key=self._enc_key,
-                ).read(partition)
-            return self._read_cdf(partition)
+            # Same Arrow-batch file reader as the batch path; the
+            # plan-order emit appends partition values for splits from
+            # partitioned segments (no-op for flat files already in
+            # plan order).
+            files = VersionedReader(
+                [], {}, self._prune, {},
+                col_order=(
+                    self._base_cols
+                    if (self._base_cols or not self._mapping_active)
+                    else None
+                ),
+                col_types=self._base_types,
+                renames=self._renames,
+                encryption_key=self._enc_key,
+            )
+            return _one_schema(
+                b
+                for unit in partition.units
+                for b in (
+                    self._read_cdf(unit)
+                    if isinstance(unit, CDFPartition)
+                    else files.read_file(unit)
+                )
+            )
 
         def _read_cdf(self, partition):
             import pyarrow as pa
@@ -2925,8 +3012,46 @@ def register_datasource(spark: SparkSession) -> None:
     """Idempotent per-session registration of the custom format."""
     key = "argodb_mapreduce_spark._pyds_registered"
     if spark.conf.get(key, None) != "1":
-        spark.dataSource.register(make_versioned_datasource())
+        spark.dataSource.register(
+            make_versioned_datasource(
+                spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes(),
+                spark.sparkContext.defaultParallelism,
+            )
+        )
         spark.conf.set(key, "1")
+
+
+def read_options(
+    version: int | None = None,
+    predicates=(),
+    encryption_key: str | None = None,
+) -> dict[str, str]:
+    """The load options :func:`read_versioned` passes to the format."""
+    import datetime as _dt
+    import json as _json
+
+    opts = {}
+    if version is not None:
+        opts["version"] = str(version)
+    if encryption_key is not None:
+        opts["encryptionKey"] = encryption_key
+    if predicates:
+        opts["prune"] = _json.dumps(
+            [
+                [c, o, v.isoformat() if isinstance(v, (_dt.datetime, _dt.date)) else v]
+                for c, o, v in predicates
+            ]
+        )
+    return opts
+
+
+def planned_files(path: str, **read_kw) -> list[str]:
+    """The data files the format plans for ``read_versioned(spark, path,
+    **read_kw)``, one entry per planned file however the files are
+    packed into tasks. Planned in-process from the manifest: no Spark
+    job."""
+    ds = make_versioned_datasource()({"path": path, **read_options(**read_kw)})
+    return [u.path for b in ds.reader(ds.schema()).partitions() for u in b.units]
 
 
 def read_versioned(
@@ -2945,22 +3070,12 @@ def read_versioned(
     the stat values. ``encryption_key`` (base64 master key) decrypts
     parquet-modular-encrypted versions — the reference's
     keys-through-read-options contract."""
-    import datetime as _dt
-    import json as _json
-
     register_datasource(spark)
-    r = spark.read.format(FORMAT_NAME)
-    if version is not None:
-        r = r.option("version", str(version))
-    if encryption_key is not None:
-        r = r.option("encryptionKey", encryption_key)
-    if predicates:
-        enc = [
-            [c, o, v.isoformat() if isinstance(v, (_dt.datetime, _dt.date)) else v]
-            for c, o, v in predicates
-        ]
-        r = r.option("prune", _json.dumps(enc))
-    df = r.load(path)
+    df = (
+        spark.read.format(FORMAT_NAME)
+        .options(**read_options(version, predicates, encryption_key))
+        .load(path)
+    )
     for col, op, lit in predicates:
         c = F.col(col)
         df = df.filter(
@@ -3092,8 +3207,8 @@ def drain_backlog(
         "reference's InputFormat contract — snapshot-pinned splits + "
         "per-split batch reader — re-expressed in Spark 4's DataSource "
         "API, reading two versions of a versioned table through "
-        "spark.read.format(...). Arrow-batch read path, one partition "
-        "per file (file-aligned splits)."
+        "spark.read.format(...). Arrow-batch read path, file-aligned "
+        "splits packed into whole-file bins."
     ),
 )
 def pyds_versioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3933,7 +4048,7 @@ def snapshot_encrypted_key_rotation(
 )
 def pyds_column_encrypted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the keyless subset scan is the keyed scan minus cipher
-    work — one task per file, plaintext-footer schema only, encrypted
+    work — whole files per task, plaintext-footer schema only, encrypted
     columns' chunk metadata NEVER touched (parquet-cpp hard-aborts
     keyless access, so the projection gate fires at plan time).
     Manifest min/max pruning composes for plaintext columns, so a
@@ -4078,9 +4193,9 @@ def pyds_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .save(path)
     )
     preds = [("o_orderpriority", "=", "1-URGENT")]
-    full = read_versioned(spark, path).rdd.getNumPartitions()
+    full = len(planned_files(path))
     df = read_versioned(spark, path, predicates=preds)
-    planned = df.rdd.getNumPartitions()
+    planned = len(planned_files(path, predicates=preds))
     native_n = snapshot_read(spark, path, predicates=preds).count()
     # native_equal folds into the one aggregate pass over the pyds read
     # (the agg's own COUNT IS the pyds row count — the separate
@@ -4319,8 +4434,8 @@ def pyds_rowgroup_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept, _offs = hooks["select_row_groups"](pf, preds)
     total = pf.metadata.num_row_groups
     # File-level stats span the whole key range: the file itself is
-    # not skippable (planned splits == 1 == all files).
-    planned = df.rdd.getNumPartitions()
+    # not skippable (planned files == 1 == all files).
+    planned = len(planned_files(out, predicates=preds))
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_key"),
@@ -4375,11 +4490,9 @@ def pyds_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("o_orderdate", ">=", _dt.datetime.fromisoformat(_PRUNE_LO)),
         ("o_orderdate", "<", _dt.datetime.fromisoformat(_PRUNE_HI)),
     ]
-    full_parts = read_versioned(spark, path).rdd.getNumPartitions()
     pruned_df = read_versioned(spark, path, predicates=preds)
-    # Partition counts ARE the pruning evidence: the python-datasource
-    # scan plans one task per surviving file (metadata-only check).
-    pruned = pruned_df.rdd.getNumPartitions() < full_parts
+    # Planned file counts ARE the pruning evidence (metadata-only).
+    pruned = len(planned_files(path, predicates=preds)) < len(planned_files(path))
     return pruned_df.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_key"),
@@ -4432,9 +4545,9 @@ def pyds_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("o_orderdate", ">=", _dt.datetime.fromisoformat("1998-01-01")),
         ("o_orderpriority", "=", "1-URGENT"),
     ]
-    full = read_versioned(spark, out).rdd.getNumPartitions()
+    full = len(planned_files(out))
     df = read_versioned(spark, out, predicates=preds)
-    planned = df.rdd.getNumPartitions()
+    planned = len(planned_files(out, predicates=preds))
     expected = len(
         _glob.glob(
             os.path.join(out, "data-1", "o_orderpriority=1-URGENT", "*.parquet")

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime as _dt
+import decimal
 import glob as _glob
 import json
 import math
@@ -5057,6 +5058,99 @@ def _write_dv_sidecar(dv: DataFrame, dv_staged: str) -> None:
 #: (the broad-delete regime, where most segments are touched anyway).
 _DELETE_KEYS_PRUNE_CAP = 10_000
 
+#: Spark integral type -> (bit width, SQL literal suffix).
+_INT_LITERALS = {
+    "bigint": (64, "L"),
+    "int": (32, ""),
+    "smallint": (16, "S"),
+    "tinyint": (8, "Y"),
+}
+
+
+def _sql_literal(v, dtype) -> str | None:
+    """``v`` (a value collected from a column of Spark type ``dtype``)
+    as a typed Spark SQL literal, or None when the type or value is not
+    covered. Timestamps render as the exact UTC instant ``lit`` would
+    ship, so the session time zone cannot shift them."""
+    name = dtype.simpleString()
+    if name in _INT_LITERALS:
+        bits, suffix = _INT_LITERALS[name]
+        if type(v) is int and -(1 << (bits - 1)) <= v < 1 << (bits - 1):
+            return f"{v}{suffix}"
+        return None
+    if name == "string" and isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if name == "boolean" and isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if name == "double" and type(v) is float:
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{v!r}D"
+    if name.startswith("decimal") and isinstance(v, decimal.Decimal):
+        return f"{v:f}BD" if v.is_finite() else None
+    if name == "date" and type(v) is _dt.date:
+        return f"DATE '{v.isoformat()}'"
+    if name == "timestamp" and isinstance(v, _dt.datetime):
+        from pyspark.sql.types import TimestampType
+
+        utc = _dt.datetime(1970, 1, 1) + _dt.timedelta(
+            microseconds=TimestampType().toInternal(v)
+        )
+        return f"TIMESTAMP '{utc.isoformat(sep=' ')}+00:00'"
+    return None
+
+
+def _sql_attr(name: str) -> str | None:
+    """``F.col``'s attribute-name syntax (dot-separated parts, backtick
+    quoting with doubled backticks) re-rendered with every part quoted,
+    or None when ``name`` does not parse."""
+    parts, cur, i, quoted = [], "", 0, False
+    while i < len(name):
+        c = name[i]
+        if quoted:
+            if c == "`" and name[i + 1 : i + 2] == "`":
+                cur, i = cur + "`", i + 2
+                continue
+            if c == "`":
+                quoted = False
+                if name[i + 1 : i + 2] not in ("", "."):
+                    return None
+            else:
+                cur += c
+        elif c == "`" and not cur:
+            quoted = True
+        elif c == "`":
+            return None
+        elif c == ".":
+            parts.append(cur)
+            cur = ""
+        else:
+            cur += c
+        i += 1
+    if quoted:
+        return None
+    parts.append(cur)
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def _key_in(key_col: str, vals, dtype):
+    """``key_col IN (vals)`` as ONE Column. ``Column.isin`` creates a
+    literal per value at about four py4j round trips each (about 2,400
+    calls for 600 keys); rendering the values as typed SQL literals of the key
+    column's ``dtype`` and parsing the list in one ``F.expr`` costs a
+    handful. The optimized plan holds the same ``InSet`` filter. Values
+    the renderer does not cover keep ``isin``; an empty list is
+    ``lit(False)``."""
+    if not vals:
+        return F.lit(False)
+    ref = _sql_attr(key_col)
+    lits = [_sql_literal(v, dtype) for v in vals]
+    if ref is None or None in lits:
+        return F.col(key_col).isin(vals)
+    return F.expr(f"{ref} IN ({', '.join(lits)})")
+
 
 def _segments_possibly_holding_keys(latest: dict, vals, key_col: str) -> list[str]:
     """Touched-segment discovery for a key-set DELETE, from the
@@ -5288,11 +5382,10 @@ def delete_keys(
     # regardless of key-set size (the Delta touched-file-set pattern);
     # over-cap sets run the SAME discovery distributed instead of
     # falling back to a full scan.
-    key_sample = (
-        []
-        if _precomputed_segs is not None
-        else keys.select(key_col).distinct().limit(prune_cap + 1).collect()
-    )
+    key_sample = []
+    if _precomputed_segs is None:
+        key_frame = keys.select(key_col).distinct().limit(prune_cap + 1)
+        key_sample = key_frame.collect()
     persisted = False
     # Under-cap key sets are COMPLETE after the bounded collect above —
     # reuse them as literal IN-list predicates for the matched-position
@@ -5302,13 +5395,13 @@ def delete_keys(
     # (NULL target keys match neither), and the broadcast-build job plus
     # the key frame's re-evaluation disappear. Over-cap sets keep the
     # broadcast semi-join (:func:`_matched_positions`, plan-gated).
-    key_vals = None
+    key_in = None
     try:
         if _precomputed_segs is not None:
             segs = list(_precomputed_segs)
         elif len(key_sample) <= prune_cap:
             vals = [r[0] for r in key_sample if r[0] is not None]
-            key_vals = vals
+            key_in = _key_in(key_col, vals, key_frame.schema[0].dataType)
             segs = _segments_possibly_holding_keys(latest, vals, key_col)
         else:
             # The over-cap key frame is evaluated by BOTH the
@@ -5330,10 +5423,8 @@ def delete_keys(
         )
         if latest.get("dv"):
             scan = _anti_join_dv(spark, path, latest["dv"], scan)
-        if key_vals is not None:
-            matched = scan.filter(
-                F.col(key_col).isin(key_vals) if key_vals else F.lit(False)
-            ).select(
+        if key_in is not None:
+            matched = scan.filter(key_in).select(
                 F.col("__fp").alias("file_path"), F.col("__ri").alias("row_index")
             )
         else:
@@ -7090,13 +7181,16 @@ def snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a metadata-only policy change — new data lands under the new spec
     immediately, old data is never rewritten (rewrite-by-attrition via
     OPTIMIZE if wanted); the alternative is an O(table) migration."""
-    from argodb_mapreduce_spark.sources.python_datasource import read_versioned
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        planned_files,
+        read_versioned,
+    )
 
     out = _build_partition_evolution_fixture(spark, sf_dir)
-    full = read_versioned(spark, out).rdd.getNumPartitions()
+    full = len(planned_files(out))
     preds = [("o_orderstatus", "=", "F")]
     df = read_versioned(spark, out, predicates=preds)
-    planned = df.rdd.getNumPartitions()
+    planned = len(planned_files(out, predicates=preds))
     n_all = snapshot_read(spark, out).count()
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -7503,7 +7597,11 @@ def _merge_upsert_on(
         if len(key_rows) <= _DELETE_KEYS_PRUNE_CAP
         else None
     )
+    key_in = None
     if key_vals is not None:
+        # One Column for every literal-IN site below (touched-file
+        # probe, kept rows, CDF preimage).
+        key_in = _key_in(key_col, key_vals, keys.schema[0].dataType)
         cand_segs = _segments_possibly_holding_keys(latest, key_vals, key_col)
     else:
         cand_segs = list(segs)
@@ -7516,10 +7614,8 @@ def _merge_upsert_on(
         if dv_name:
             tgt = _anti_join_dv(spark, path, dv_name, tgt)
         probe = tgt.select(F.col(key_col), F.col("__fp").alias("fp"))
-        if key_vals is not None:
-            hit = probe.filter(
-                F.col(key_col).isin(key_vals) if key_vals else F.lit(False)
-            )
+        if key_in is not None:
+            hit = probe.filter(key_in)
         else:
             hit = probe.join(F.broadcast(keys), key_col, "inner")
         # metadata-collect: O(matched files) distinct paths — Delta's
@@ -7576,14 +7672,10 @@ def _merge_upsert_on(
             kept_scan = _anti_join_dv(spark, path, dv_name, kept_scan).drop(
                 "__fp", "__ri"
             )
-        if key_vals is not None:
+        if key_in is not None:
             # left_anti on literals: NULL target keys match nothing and
             # are kept, exactly the anti-join's NULL semantics.
-            kept = kept_scan.filter(
-                F.col(key_col).isNull() | ~F.col(key_col).isin(key_vals)
-                if key_vals
-                else F.lit(True)
-            )
+            kept = kept_scan.filter(F.col(key_col).isNull() | ~key_in)
         else:
             kept = kept_scan.join(F.broadcast(keys), key_col, "left_anti")
         if cmap:
@@ -7605,10 +7697,8 @@ def _merge_upsert_on(
         # no-touched MERGE needs no sidecar: its commit is pure-append-
         # shaped and change_feed derives the inserts from the manifest.
         if _cdf_enabled(path):
-            if key_vals is not None:
-                matched = kept_scan.filter(
-                    F.col(key_col).isin(key_vals) if key_vals else F.lit(False)
-                )
+            if key_in is not None:
+                matched = kept_scan.filter(key_in)
                 # metadata-collect: target-matched keys, a SUBSET of the
                 # cap-bounded collected key set — one bounded collect
                 # replaces the two broadcast builds the post/ins legs'
@@ -7616,9 +7706,7 @@ def _merge_upsert_on(
                 tgt_vals = [
                     r[0] for r in matched.select(key_col).distinct().collect()
                 ]
-                post_pred = (
-                    F.col(key_col).isin(tgt_vals) if tgt_vals else F.lit(False)
-                )
+                post_pred = _key_in(key_col, tgt_vals, keys.schema[0].dataType)
                 pre = matched.withColumn("_change_type", F.lit("update_preimage"))
                 post = source.filter(post_pred).withColumn(
                     "_change_type", F.lit("update_postimage")

@@ -28,6 +28,7 @@ from argodb_mapreduce_spark.sources.versioned import (
     vacuum,
     versioned_write,
 )
+from tests.conftest import pyds_units
 
 
 def _base(spark, tmp_path, n=60):
@@ -675,7 +676,7 @@ def test_starting_version_beyond_head_and_vacuumed_errors(spark, tmp_path):
         r2.partitions(r2.initialOffset(), {"version": 3})
     # at the horizon: works
     r3 = reader(startingVersion=3)
-    parts = r3.partitions(r3.initialOffset(), {"version": 3})
+    parts = pyds_units(r3.partitions(r3.initialOffset(), {"version": 3}))
     import os as _o
 
     segs = {_o.path.basename(_o.path.dirname(pt.path)) for pt in parts}

@@ -8,7 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from argodb_mapreduce_spark.catalog import load_table
-from argodb_mapreduce_spark.sources.python_datasource import read_versioned
+from argodb_mapreduce_spark.sources.python_datasource import planned_files, read_versioned
 from argodb_mapreduce_spark.sources.versioned import (
     snapshot_read,
     versioned_write,
@@ -22,16 +22,61 @@ def _mk(spark, tmp_path) -> str:
     return path
 
 
-def test_one_partition_per_file(spark, tmp_path):
+def _bins(path, max_partition_bytes, parallelism, **read_kw):
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        make_versioned_datasource,
+        read_options,
+    )
+
+    ds = make_versioned_datasource(max_partition_bytes, parallelism)(
+        {"path": path, **read_options(**read_kw)}
+    )
+    return ds.reader(ds.schema()).partitions()
+
+
+def test_partitions_pack_files_into_bins(spark, tmp_path):
+    """getSplits ≙ partitions(): whole files packed into
+    max(ceil(bytes / maxPartitionBytes), min(files, parallelism)) bins
+    (never more bins than files), each file in exactly one bin, the
+    largest first onto the least-loaded bin."""
+    import math
+
     path = _mk(spark, tmp_path)
-    n_files = sum(
-        1
+    files = sorted(
+        os.path.join(path, seg, f)
         for seg in ("data-0", "data-1")
         for f in os.listdir(os.path.join(path, seg))
         if f.endswith(".parquet")
     )
+    sizes = {f: os.path.getsize(f) for f in files}
+    total = sum(sizes.values())
+    for max_bytes, par in [
+        (128 << 20, 1),
+        (128 << 20, 4),
+        (128 << 20, 64),
+        (1, 1),
+        (math.ceil(total / 3), 1),
+        (math.ceil(total / 3), 2),
+    ]:
+        bins = _bins(path, max_bytes, par, version=1)
+        want = min(
+            len(files), max(math.ceil(total / max_bytes), min(len(files), par))
+        )
+        assert len(bins) == want, (max_bytes, par)
+        assert all(b.units for b in bins)
+        assert sorted(u.path for b in bins for u in b.units) == files
+        # Greedy largest-first placement: no bin exceeds the lightest
+        # bin by more than its own smallest file.
+        loads = [sum(sizes[u.path] for u in b.units) for b in bins]
+        for b, load in zip(bins, loads):
+            assert load - min(loads) <= min(sizes[u.path] for u in b.units)
+    # The session-registered reader packs this small table into at most
+    # defaultParallelism tasks and returns the same rows.
     df = read_versioned(spark, path, 1)
-    assert df.rdd.getNumPartitions() == n_files  # getSplits ≙ partitions()
+    assert df.rdd.getNumPartitions() == min(
+        len(files), spark.sparkContext.defaultParallelism
+    )
+    assert sorted(r.k for r in df.collect()) == list(range(30))
 
 
 def test_matches_native_snapshot_read_per_version(spark, tmp_path):
@@ -206,7 +251,9 @@ def test_prune_option_skips_files_and_stays_exact(spark, sf_dir):
     ]
     full = read_versioned(spark, path)
     pruned = read_versioned(spark, path, predicates=preds)
-    assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
+    assert len(planned_files(path, predicates=preds)) < len(
+        planned_files(path)
+    )
     expected = snapshot_read(spark, path, predicates=preds).count()
     assert pruned.count() == expected
     # The unpruned relation is untouched by the pruned one's planning —
@@ -234,7 +281,9 @@ def test_prune_option_conservative_on_statless_column(spark, sf_dir, tmp_path):
     rewrite(out, entries)
     preds = [("o_totalprice", ">", 1e18)]  # provably empty, but no stats
     pruned = read_versioned(spark, out, predicates=preds)
-    assert pruned.rdd.getNumPartitions() == read_versioned(spark, out).rdd.getNumPartitions()
+    assert sorted(planned_files(out, predicates=preds)) == sorted(
+        planned_files(out)
+    )
     assert pruned.count() == 0  # residual filter still exact
 
 
@@ -770,3 +819,107 @@ def test_rowgroup_selection_conservative_without_stats(spark, tmp_path):
     kept, offs = hooks["select_row_groups"](pf, [("nonexistent", "=", 1)])
     assert kept == list(range(pf.metadata.num_row_groups))
     assert offs[0] == 0 and len(offs) == len(kept)
+
+
+def _unit_key(u):
+    """A planned unit's identity: file, DV positions, partition values
+    (and, for change-feed units, kind and version)."""
+    return (
+        getattr(u, "kind", "file"),
+        u.path,
+        getattr(u, "version", None),
+        tuple(getattr(u, "positions", None) or getattr(u, "excluded", ()) or ()),
+        tuple(u.parts),
+    )
+
+
+def _assert_each_unit_once(one_bin, packed):
+    assert len(one_bin) == 1
+    assert all(b.units for b in packed)
+    assert sorted(map(_unit_key, one_bin[0].units)) == sorted(
+        _unit_key(u) for b in packed for u in b.units
+    )
+
+
+def test_packed_bins_keep_every_file_once_with_dv_parts_and_keys(spark, tmp_path):
+    """Packing never drops, duplicates or cuts a file: a DV table, a
+    Hive-partitioned table and an encrypted table plan the same per-file
+    units (DV positions, partition values) packed or not, and the
+    session reader still equals snapshot_read."""
+    from argodb_mapreduce_spark.sources.versioned import delete_where
+    from tests.test_round13_ops import _enc_key, _write_enc
+
+    dv = str(tmp_path / "dv")
+    for lo in (0, 40, 80):
+        versioned_write(
+            spark.range(lo, lo + 40).withColumnRenamed("id", "k").repartition(3), dv
+        )
+    delete_where(spark, dv, [("k", "<", 50)])
+    part = str(tmp_path / "part")
+    for lo in (0, 60):
+        versioned_write(
+            spark.range(lo, lo + 60).select(
+                F.col("id").alias("v"), (F.col("id") % 3).cast("int").alias("g")
+            ),
+            part,
+            partition_by=("g",),
+        )
+    enc = str(tmp_path / "enc")
+    key = _enc_key()
+    _write_enc(spark, enc, 0, 30, key)
+    _write_enc(spark, enc, 30, 60, key)
+    for path, k in ((dv, None), (part, None), (enc, key)):
+        one = _bins(path, 128 << 20, 1, encryption_key=k)
+        assert len(one[0].units) > 3
+        if path == dv:
+            assert any(u.excluded for u in one[0].units)
+        if path == part:
+            assert all(u.parts for u in one[0].units)
+        for par in (2, 3, 64):
+            _assert_each_unit_once(one, _bins(path, 128 << 20, par, encryption_key=k))
+        got = read_versioned(spark, path, encryption_key=k)
+        want = snapshot_read(spark, path, encryption_key=k)
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_packed_cdf_stream_keeps_every_unit_once(spark, tmp_path):
+    """The change-feed stream packs its per-file units (sidecar, insert
+    and DV-delete legs across update, merge and delete versions) without
+    dropping or duplicating one."""
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        make_versioned_datasource,
+    )
+    from argodb_mapreduce_spark.sources.versioned import (
+        delete_keys,
+        enable_change_data_feed,
+        merge_upsert,
+        update_where,
+    )
+
+    p = str(tmp_path / "cdf")
+    base = spark.range(0, 60).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    versioned_write(base.repartition(4), p)
+    enable_change_data_feed(p)
+    update_where(spark, p, [("k", "<", 5)], {"v": F.col("v") + 1})
+    merge_upsert(
+        spark,
+        p,
+        spark.range(50, 70).select(F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")),
+        "k",
+    )
+    delete_keys(spark, p, spark.range(20, 30).withColumnRenamed("id", "k"), "k")
+    versioned_write(spark.range(100, 110).select(F.col("id").alias("k"), F.col("id").alias("v")), p)
+
+    def plan(par):
+        ds = make_versioned_datasource(128 << 20, par)(
+            {"path": p, "readChangeFeed": "true"}
+        )
+        r = ds.streamReader(ds.schema())
+        return r.partitions({"version": -1}, r.latestOffset())
+
+    one = plan(1)
+    assert {u.kind for u in one[0].units} >= {"insert", "cdc", "delete"}
+    for par in (2, 3, 64):
+        _assert_each_unit_once(one, plan(par))

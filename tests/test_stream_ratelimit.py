@@ -18,6 +18,7 @@ from argodb_mapreduce_spark.sources.python_datasource import (
     read_versioned,
 )
 from argodb_mapreduce_spark.sources.versioned import versioned_write
+from tests.conftest import pyds_units
 
 
 def _appends(spark, path, n, rows=10):
@@ -42,7 +43,7 @@ def test_end_version_clamps_latest_offset(spark, tmp_path):
     _appends(spark, p, 5)
     r = _reader(p, endVersion=2)
     assert r.latestOffset() == {"version": 2}
-    parts = r.partitions({"version": -1}, {"version": 2})
+    parts = pyds_units(r.partitions({"version": -1}, {"version": 2}))
     import os
 
     segs = {os.path.basename(os.path.dirname(pt.path)) for pt in parts}
@@ -191,7 +192,7 @@ def test_starting_version_unit_semantics(spark, tmp_path):
     _appends(spark, p, 4)
     r = _reader(p, startingVersion=2)
     assert r.initialOffset() == {"version": 1}
-    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    parts = pyds_units(r.partitions(r.initialOffset(), r.latestOffset()))
     import os
 
     segs = {os.path.basename(os.path.dirname(pt.path)) for pt in parts}
@@ -219,10 +220,10 @@ def test_rate_limit_composes_with_cdf_over_rewrites(spark, tmp_path):
     r = _reader(p, maxVersionsPerBatch=2, readChangeFeed="true")
     assert r.initialOffset() == {"version": -1}
     assert r.latestOffset() == {"version": 1}
-    p1 = r.partitions({"version": -1}, {"version": 1})
+    p1 = pyds_units(r.partitions({"version": -1}, {"version": 1}))
     assert all(pt.kind == "insert" for pt in p1)
     assert r.latestOffset() == {"version": 3}
-    p2 = r.partitions({"version": 1}, {"version": 3})
+    p2 = pyds_units(r.partitions({"version": 1}, {"version": 3}))
     kinds = sorted({pt.kind for pt in p2})
     assert kinds == ["cdc", "insert"]  # v2 append + v3 sidecar
     assert r.latestOffset() == {"version": 4}

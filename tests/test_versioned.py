@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
 from argodb_mapreduce_spark.catalog import ScanError, snapshot, table_path
 from argodb_mapreduce_spark.sources.versioned import (
+    delete_keys,
+    merge_upsert,
     snapshot_read,
     versioned_write,
     versions,
@@ -562,14 +566,18 @@ def test_pyds_reads_partitioned_table(spark, part_table):
 def test_pyds_partitioned_pruning_is_file_precise(spark, part_table):
     """An equality predicate on the partition column prunes to exactly
     that branch's file splits — partition values act as [v, v] stats."""
-    from argodb_mapreduce_spark.sources.python_datasource import read_versioned
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        planned_files,
+        read_versioned,
+    )
 
     import glob
 
-    full = read_versioned(spark, part_table).rdd.getNumPartitions()
+    full = len(planned_files(part_table))
+    pruned = planned_files(part_table, predicates=[("k", "=", 3)])
     pruned_df = read_versioned(spark, part_table, predicates=[("k", "=", 3)])
-    k3_files = len(glob.glob(os.path.join(part_table, "data-*", "k=3", "*.parquet")))
-    assert pruned_df.rdd.getNumPartitions() == k3_files < full
+    k3_files = glob.glob(os.path.join(part_table, "data-*", "k=3", "*.parquet"))
+    assert sorted(pruned) == sorted(k3_files) and len(k3_files) < full
     assert pruned_df.count() == 50
 
 
@@ -1686,3 +1694,114 @@ def test_delete_keys_feeds_change_feed_and_mv(spark, tmp_path):
         r.k for r in feed.filter(F.col("_change_type") == "delete").collect()
     )
     assert dels == [0, 1, 2]
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+_KEY_IN_CASES = [
+    (
+        "k bigint",
+        [0, 1, -1, -(2**63), 2**63 - 1, 42],
+        [7, None, 2**62],
+    ),
+    (
+        "k string",
+        ["it's", "back\\slash", "tick`s", "ünï ✓ 数据", "", "a'b\\'c", "\\'"],
+        ["x", None, "it", "tick"],
+    ),
+    ("k date", [dt.date(2024, 2, 29), dt.date(1970, 1, 1), dt.date(1969, 12, 31)], [dt.date(2024, 3, 1), None]),
+    (
+        "k timestamp",
+        [
+            dt.datetime(2024, 1, 1),
+            dt.datetime(2024, 6, 30, 23, 59, 59, 999999),
+            dt.datetime(1969, 12, 31, 23, 59, 59, 500000),
+        ],
+        [dt.datetime(2024, 1, 1, 0, 0, 0, 1), None],
+    ),
+    (
+        "k decimal(10,2)",
+        [Decimal("1.50"), Decimal("-0.01"), Decimal("12345678.90"), Decimal("0.00")],
+        [Decimal("1.51"), None],
+    ),
+    (
+        "k double",
+        [1.5, -0.0, float("nan"), float("inf"), float("-inf"), 1e-300, 2.0**53],
+        [0.0, 2.5, None, -1.5],
+    ),
+    ("k boolean", [True], [False, None]),
+    ("`k``ey` bigint", [3, -3], [4, None]),
+]
+
+
+@pytest.mark.parametrize("ddl,vals,others", _KEY_IN_CASES, ids=lambda c: str(c)[:16])
+def test_key_in_selects_exactly_what_isin_selects(spark, ddl, vals, others):
+    """The one-call IN-list renders every value of these key types as a
+    typed SQL literal and keeps isin's rows and optimized InSet plan."""
+    from argodb_mapreduce_spark.sources.versioned import _key_in, _sql_literal
+
+    df = spark.createDataFrame([(v,) for v in vals + others], ddl)
+    name = df.columns[0]
+    ref = "`" + name.replace("`", "``") + "`"
+    dtype = df.schema[0].dataType
+    collected = [r[0] for r in df.limit(len(vals)).collect()]
+    assert all(_sql_literal(v, dtype) is not None for v in collected)
+    got = df.filter(_key_in(ref, collected, dtype))
+    want = df.filter(F.col(ref).isin(collected))
+    assert _rows(got) == _rows(want)
+    assert len(_rows(got)) >= len(vals) - 1  # not vacuous (NaN may not self-match)
+    plan = lambda d: d._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
+    assert plan(got) == plan(want)
+
+
+def test_key_in_keeps_isin_for_unrendered_types(spark):
+    """Types and values the renderer does not cover fall back to isin:
+    same rows, no literal rendered."""
+    from pyspark.sql.types import LongType
+
+    from argodb_mapreduce_spark.sources.versioned import _key_in, _sql_literal
+
+    df = spark.createDataFrame([(b"ab",), (b"cd",), (None,)], "k binary")
+    dtype = df.schema[0].dataType
+    assert _sql_literal(b"ab", dtype) is None
+    assert _rows(df.filter(_key_in("k", [b"ab"], dtype))) == _rows(
+        df.filter(F.col("k").isin([b"ab"]))
+    )
+    assert _sql_literal("5", LongType()) is None
+    assert _sql_literal(True, LongType()) is None
+    assert _sql_literal(2**63, LongType()) is None
+    ints = spark.range(10).withColumnRenamed("id", "k")
+    assert _rows(ints.filter(_key_in("k", [3, "5"], LongType()))) == _rows(
+        ints.filter(F.col("k").isin([3, "5"]))
+    )
+    assert ints.filter(_key_in("k", [], LongType())).count() == 0
+
+
+def test_dml_py4j_round_trips_flat_in_key_count(spark, tmp_path, py4j_calls):
+    """merge_upsert and delete_keys build each key IN-list in one call:
+    growing the key set 20x leaves their py4j round trips flat."""
+    calls = {}
+    for n in (100, 2000):
+        path = str(tmp_path / f"t{n}")
+        versioned_write(
+            spark.range(4000).select(F.col("id").alias("k"), F.col("id").alias("v")),
+            path,
+        )
+        src = spark.range(n).select(
+            (F.col("id") * 2).alias("k"), F.lit(-1).cast("long").alias("v")
+        )
+        with py4j_calls() as merged:
+            merge_upsert(spark, path, src, "k")
+        keys = spark.range(n).select((F.col("id") * 2 + 1).alias("k"))
+        with py4j_calls() as deleted:
+            delete_keys(spark, path, keys, "k")
+        calls[n] = (merged(), deleted())
+        back = snapshot_read(spark, path)
+        assert back.count() == 4000 - n
+        assert back.filter(F.col("v") == -1).count() == n
+    # isin pays about four round trips per key (7,600 more here); allow
+    # a quarter per added key for incidental work that grows with data.
+    for i in (0, 1):
+        assert calls[2000][i] - calls[100][i] < 0.25 * (2000 - 100), calls
