@@ -5067,6 +5067,10 @@ _INT_LITERALS = {
 }
 
 
+#: Characters escaped inside a rendered string literal.
+_SQL_STRING_ESCAPES = str.maketrans({"\\": "\\\\", "'": "\\'", "$": "\\u0024"})
+
+
 def _sql_literal(v, dtype) -> str | None:
     """``v`` (a value collected from a column of Spark type ``dtype``)
     as a typed Spark SQL literal, or None when the type or value is not
@@ -5079,7 +5083,9 @@ def _sql_literal(v, dtype) -> str | None:
             return f"{v}{suffix}"
         return None
     if name == "string" and isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        # '$' as an escape: the parser substitutes ${...} in the SQL
+        # text before it lexes the literal (spark.sql.variable.substitute).
+        return "'" + v.translate(_SQL_STRING_ESCAPES) + "'"
     if name == "boolean" and isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if name == "double" and type(v) is float:
@@ -5102,54 +5108,26 @@ def _sql_literal(v, dtype) -> str | None:
     return None
 
 
-def _sql_attr(name: str) -> str | None:
-    """``F.col``'s attribute-name syntax (dot-separated parts, backtick
-    quoting with doubled backticks) re-rendered with every part quoted,
-    or None when ``name`` does not parse."""
-    parts, cur, i, quoted = [], "", 0, False
-    while i < len(name):
-        c = name[i]
-        if quoted:
-            if c == "`" and name[i + 1 : i + 2] == "`":
-                cur, i = cur + "`", i + 2
-                continue
-            if c == "`":
-                quoted = False
-                if name[i + 1 : i + 2] not in ("", "."):
-                    return None
-            else:
-                cur += c
-        elif c == "`" and not cur:
-            quoted = True
-        elif c == "`":
-            return None
-        elif c == ".":
-            parts.append(cur)
-            cur = ""
-        else:
-            cur += c
-        i += 1
-    if quoted:
-        return None
-    parts.append(cur)
-    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
-
-
 def _key_in(key_col: str, vals, dtype):
     """``key_col IN (vals)`` as ONE Column. ``Column.isin`` creates a
     literal per value at about four py4j round trips each (about 2,400
     calls for 600 keys); rendering the values as typed SQL literals of the key
     column's ``dtype`` and parsing the list in one ``F.expr`` costs a
     handful. The optimized plan holds the same ``InSet`` filter. Values
-    the renderer does not cover keep ``isin``; an empty list is
+    the renderer does not cover, dotted or backticked column names, and
+    string keys under ``spark.sql.parser.escapedStringLiterals`` (which
+    turns the literal escapes off) keep ``isin``; an empty list is
     ``lit(False)``."""
     if not vals:
         return F.lit(False)
-    ref = _sql_attr(key_col)
     lits = [_sql_literal(v, dtype) for v in vals]
-    if ref is None or None in lits:
+    raw_strings = dtype.simpleString() == "string" and (
+        SparkSession.active().conf.get("spark.sql.parser.escapedStringLiterals").lower()
+        == "true"
+    )
+    if "." in key_col or "`" in key_col or None in lits or raw_strings:
         return F.col(key_col).isin(vals)
-    return F.expr(f"{ref} IN ({', '.join(lits)})")
+    return F.expr(f"`{key_col}` IN ({', '.join(lits)})")
 
 
 def _segments_possibly_holding_keys(latest: dict, vals, key_col: str) -> list[str]:

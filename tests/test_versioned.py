@@ -1708,8 +1708,21 @@ _KEY_IN_CASES = [
     ),
     (
         "k string",
-        ["it's", "back\\slash", "tick`s", "ünï ✓ 数据", "", "a'b\\'c", "\\'"],
-        ["x", None, "it", "tick"],
+        [
+            "it's",
+            "back\\slash",
+            "tick`s",
+            "ünï ✓ 数据",
+            "",
+            "a'b\\'c",
+            "\\'",
+            "a${x}",
+            "${spark.app.name}",
+            "${env:HOME}",
+            "$",
+            "\\u0024",
+        ],
+        ["x", None, "it", "tick", "a", "ax", "local", os.environ.get("HOME", "~")],
     ),
     ("k date", [dt.date(2024, 2, 29), dt.date(1970, 1, 1), dt.date(1969, 12, 31)], [dt.date(2024, 3, 1), None]),
     (
@@ -1737,18 +1750,23 @@ _KEY_IN_CASES = [
 
 
 @pytest.mark.parametrize("ddl,vals,others", _KEY_IN_CASES, ids=lambda c: str(c)[:16])
-def test_key_in_selects_exactly_what_isin_selects(spark, ddl, vals, others):
+def test_key_in_selects_exactly_what_isin_selects(spark, py4j_calls, ddl, vals, others):
     """The one-call IN-list renders every value of these key types as a
-    typed SQL literal and keeps isin's rows and optimized InSet plan."""
+    typed SQL literal and keeps isin's rows and optimized InSet plan. A
+    backticked column name keeps isin."""
     from argodb_mapreduce_spark.sources.versioned import _key_in, _sql_literal
 
     df = spark.createDataFrame([(v,) for v in vals + others], ddl)
     name = df.columns[0]
-    ref = "`" + name.replace("`", "``") + "`"
+    ref = name if "`" not in name else "`" + name.replace("`", "``") + "`"
     dtype = df.schema[0].dataType
     collected = [r[0] for r in df.limit(len(vals)).collect()]
     assert all(_sql_literal(v, dtype) is not None for v in collected)
-    got = df.filter(_key_in(ref, collected, dtype))
+    with py4j_calls() as calls:
+        key_in = _key_in(ref, collected, dtype)
+    if ref == name and len(collected) > 1:  # one F.expr, not a literal per value
+        assert calls() < 2 * len(collected), calls()
+    got = df.filter(key_in)
     want = df.filter(F.col(ref).isin(collected))
     assert _rows(got) == _rows(want)
     assert len(_rows(got)) >= len(vals) - 1  # not vacuous (NaN may not self-match)
@@ -1777,6 +1795,62 @@ def test_key_in_keeps_isin_for_unrendered_types(spark):
         ints.filter(F.col("k").isin([3, "5"]))
     )
     assert ints.filter(_key_in("k", [], LongType())).count() == 0
+
+
+def test_key_in_strings_without_literal_escapes(spark):
+    """Under spark.sql.parser.escapedStringLiterals the parser takes
+    string literals raw, so string keys keep isin: same rows."""
+    from argodb_mapreduce_spark.sources.versioned import _key_in
+
+    keys = ["it's", "b\\s", "a${x}", "$", "plain"]
+    df = spark.createDataFrame([(v,) for v in keys + ["a", "bs", "b\\\\s", None]], "k string")
+    dtype = df.schema[0].dataType
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        got = _rows(df.filter(_key_in("k", keys, dtype)))
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    assert got == _rows(df.filter(F.col("k").isin(keys)))
+    assert len(got) == len(keys)
+
+
+def test_dml_on_string_keys_with_substitution_syntax(spark, tmp_path):
+    """Keys holding ${...} reach merge_upsert and delete_keys verbatim:
+    the parser's variable substitution never rewrites them into other
+    keys ('a${x}' must not become 'a')."""
+    path = str(tmp_path / "t")
+    versioned_write(
+        spark.createDataFrame(
+            [("a", 1), ("a${x}", 2), ("${spark.app.name}", 3), ("${env:HOME}", 4), ("", 5)],
+            "k string, v bigint",
+        ),
+        path,
+    )
+    merge_upsert(
+        spark,
+        path,
+        spark.createDataFrame([("a${x}", 20), ("${y}", 6)], "k string, v bigint"),
+        "k",
+    )
+    assert sorted(tuple(r) for r in snapshot_read(spark, path).collect()) == [
+        ("", 5),
+        ("${env:HOME}", 4),
+        ("${spark.app.name}", 3),
+        ("${y}", 6),
+        ("a", 1),
+        ("a${x}", 20),
+    ]
+    delete_keys(
+        spark,
+        path,
+        spark.createDataFrame([("a${x}",), ("${env:HOME}",), ("${y}",)], "k string"),
+        "k",
+    )
+    assert sorted(tuple(r) for r in snapshot_read(spark, path).collect()) == [
+        ("", 5),
+        ("${spark.app.name}", 3),
+        ("a", 1),
+    ]
 
 
 def test_dml_py4j_round_trips_flat_in_key_count(spark, tmp_path, py4j_calls):
